@@ -83,10 +83,11 @@ def set_mode(mode: str) -> None:
 
 
 def main() -> int:
-    out_path = None
     args = sys.argv[1:]
-    if args and args[0] == "--json":
-        out_path = args[1]
+    if args and (len(args) != 2 or args[0] != "--json"):
+        print("usage: bench_forced_distributed.py [--json OUT]", file=sys.stderr)
+        return 2
+    out_path = args[1] if args else None
     spark = get_spark(app_name="forced-distributed-scaling")
     spark.sparkContext.setLogLevel("ERROR")
     registry = all_queries()
@@ -118,25 +119,28 @@ def main() -> int:
 
     ctl_start = control()
     rows: dict[str, dict] = {}
-    for name in PEELS + SUPERSTEPS:
-        modes = (
-            ["default", "forced_dist"]
-            if name in PEELS
-            else ["default", "forced_dist_shuffled"]
-        )
-        rows[name] = {}
-        for mode in modes:
-            set_mode(mode)
-            med_s, min_s = timeq(name, SF_SMALL)
-            med_b, min_b = timeq(name, SF_BIG)
-            rows[name][mode] = {
-                "sf0.01_med": med_s,
-                "sf0.01_min": min_s,
-                "sf0.1_med": med_b,
-                "sf0.1_min": min_b,
-                "growth_10x": round(med_b / med_s, 2) if med_s else None,
-            }
-    set_mode("default")
+    try:
+        for name in PEELS + SUPERSTEPS:
+            modes = (
+                ["default", "forced_dist"]
+                if name in PEELS
+                else ["default", "forced_dist_shuffled"]
+            )
+            rows[name] = {}
+            for mode in modes:
+                set_mode(mode)
+                med_s, min_s = timeq(name, SF_SMALL)
+                med_b, min_b = timeq(name, SF_BIG)
+                rows[name][mode] = {
+                    "sf0.01_med": med_s,
+                    "sf0.01_min": min_s,
+                    "sf0.1_med": med_b,
+                    "sf0.1_min": min_b,
+                    "growth_10x": round(med_b / med_s, 2) if med_s else None,
+                }
+    finally:
+        # Put the monkeypatched gates back even when a query fails.
+        set_mode("default")
     ctl_end = control()
     doc = {
         "metric": "forced_distributed_scaling",

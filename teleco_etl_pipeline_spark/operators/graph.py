@@ -49,10 +49,12 @@ _TOPK = 20
 # `n <= 2_000_000` row constants — r13 verdict issue #2): a superstep
 # frame that the planner cannot size (LogicalRDD after localCheckpoint)
 # is broadcast only while rows × payload bytes stays under a sane
-# build-relation bound. 32 MiB keeps the old behaviour EXACTLY for the
+# build-relation bound. 32 MiB keeps the old 2M-row gate for the
 # (long, long) frames the constant was tuned on (2M × 16 B = 32 MiB)
-# while a wider frame behind the same gate now trips proportionally
-# earlier — the §3.1 guidance the row-count constant could not honour.
+# and trips a wider frame proportionally earlier — the §3.1 guidance
+# the row-count constant could not honour. It is not the old gate
+# everywhere: the BFS frontier/visited sets are node-only (8 B), so
+# their gate widened from 2M to 4M rows.
 _BCAST_CAP_BYTES = 32 * 1024 * 1024
 
 
@@ -990,8 +992,7 @@ def q_supplier_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (iter, |keep|, |edges'|): the identical integers the
     # distributed rounds below compute (pinned by
     # test_kcore_driver_matches_superstep_loop).
-    n_edges0 = edges.count()
-    if n_edges0 <= _DRIVER_GRAPH_MAX_EDGES:
+    if edges.count() <= _DRIVER_GRAPH_MAX_EDGES:
         es = [(int(r["u"]), int(r["v"])) for r in edges.collect()]
         edges.unpersist()
         rows = []
@@ -1690,6 +1691,8 @@ def q_trade_graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
         # hop (the PPR superstep lesson, OPTIMIZATION_r13.md). Falls
         # back to the shuffled join when a frontier outgrows a sane
         # broadcast.
+        # Node-only frames (8 B/row): the byte gate admits up to 4M
+        # rows here, twice the old 2M-row constant.
         fb = F.broadcast(f) if _fits_broadcast(f.count(), 8) else f
         vb = (
             F.broadcast(visited)
@@ -2305,8 +2308,7 @@ def q_part_ktruss_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the oriented-wedge enumeration counts; pinned by
     # test_ktruss_driver_matches_superstep_loop); past the gate, the
     # distributed rounds below are unchanged.
-    n_edges0 = prev.count()
-    if n_edges0 <= _DRIVER_GRAPH_MAX_EDGES:
+    if prev.count() <= _DRIVER_GRAPH_MAX_EDGES:
         edges = {(int(r["u"]), int(r["v"])) for r in prev.collect()}
         rows = []
         for i in range(1, _TRUSS_ITERS + 1):

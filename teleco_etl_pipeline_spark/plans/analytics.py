@@ -150,7 +150,7 @@ def q_approx_quantile_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     SELECT o_orderkey,
            ROUND(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-                          * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE), 2)
+                          * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) + 1e-9, 2)
              AS revenue,
            epoch_us(o_orderdate) AS orderdate_us,
            o_orderpriority
@@ -192,7 +192,7 @@ def q_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(ords, li["l_orderkey"] == ords["o_orderkey"])
         .join(F.broadcast(cust), ords["o_custkey"] == cust["c_custkey"])
         .groupBy("o_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(F.round(revenue, 2).alias("revenue"))
+        .agg(F.round(revenue + EPS, 2).alias("revenue"))
         .select(
             "o_orderkey",
             "revenue",
@@ -213,7 +213,7 @@ def q_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     SELECT n_name,
            ROUND(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-                          * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE), 2)
+                          * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) + 1e-9, 2)
              AS revenue
     FROM customer
     JOIN orders   ON c_custkey = o_custkey
@@ -268,7 +268,7 @@ def q_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(nat), sup["s_nationkey"] == nat["n_nationkey"])
         .join(F.broadcast(reg), nat["n_regionkey"] == reg["r_regionkey"])
         .groupBy("n_name")
-        .agg(F.round(revenue, 2).alias("revenue"))
+        .agg(F.round(revenue + EPS, 2).alias("revenue"))
     )
 
 

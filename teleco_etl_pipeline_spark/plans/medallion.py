@@ -35,6 +35,7 @@ from teleco_etl_pipeline_spark.functions.scalars import safe_int, scrub_numeric
 from teleco_etl_pipeline_spark.operators.keys import add_surrogate_key
 from teleco_etl_pipeline_spark.operators.upsert import anti_dedup, merge_upsert
 from teleco_etl_pipeline_spark.plans import quality
+from teleco_etl_pipeline_spark.session import run_concurrently
 
 BUSINESS_COLS = [f.name for f in STAGING_SCHEMA.fields]
 
@@ -86,17 +87,9 @@ def load_staging(
     # quarantine write, staging write) would otherwise re-run the CSV
     # scan + rule evaluation — round 1 paid that scan four times.
     annotated = quality.annotate(raw, rules).cache()
-    good = annotated.filter(F.col("error_details").isNull()).drop("error_details")
-    bad = annotated.filter(F.col("error_details").isNotNull())
-
-    # One pass for both counts (the A10 conditional-agg trick).
-    row = annotated.agg(
-        F.count(F.lit(1)).alias("input"),
-        F.coalesce(
-            F.sum(F.when(F.col("error_details").isNotNull(), 1)), F.lit(0)
-        ).alias("rejected"),
-    ).collect()[0]
-    stats = {"input": row["input"], "rejected": int(row["rejected"])}
+    good, bad = quality.split_annotated(annotated)
+    n_input, n_rejected = quality.split_counts(annotated)
+    stats = {"input": n_input, "rejected": n_rejected}
     if stats["rejected"]:
         wh.write(bad, "quarantine", quarantine_table, mode="append")
 
@@ -255,28 +248,21 @@ def _idempotent_dim(
 
 
 def build_dims(wh: Warehouse) -> dict[str, int]:
-    s = wh.read("silver", "churn_raw")
-    counts = {}
+    """Build the five gold dims; returns their row counts.
 
+    The dims are independent tables (each reads silver and its own
+    gold table, writes only itself), so they are built concurrently:
+    each build is a handful of small-table actions whose wall time is
+    mostly driver-side. Keys and contents are the same as a sequential
+    build."""
+    s = wh.read("silver", "churn_raw")
     contract = s.filter(F.col("contract").isNotNull()).select(
         _norm_contract().alias("contract_type")
     )
-    counts["dim_contract"] = _idempotent_dim(
-        wh, "dim_contract", "contract_key", contract, ["contract_type"]
-    ).count()
-
     payment = s.filter(F.col("payment_method").isNotNull()).select("payment_method")
-    counts["dim_payment_method"] = _idempotent_dim(
-        wh, "dim_payment_method", "payment_method_key", payment, ["payment_method"]
-    ).count()
-
     reason = s.select(
         F.coalesce(F.col("churn_reason"), F.lit("n/a")).alias("churn_reason")
     )
-    counts["dim_churn_reason"] = _idempotent_dim(
-        wh, "dim_churn_reason", "churn_reason_key", reason, ["churn_reason"]
-    ).count()
-
     customer = s.select(
         "customer_id",
         "gender",
@@ -288,7 +274,25 @@ def build_dims(wh: Warehouse) -> dict[str, int]:
         "city",
         "state",
     )
-    # NOT EXISTS is on customer_id alone (gold SQL :59-61)
+    services = s.select(*SERVICE_COLS)
+    builds = {
+        "dim_contract": lambda: _idempotent_dim(
+            wh, "dim_contract", "contract_key", contract, ["contract_type"]
+        ).count(),
+        "dim_payment_method": lambda: _idempotent_dim(
+            wh, "dim_payment_method", "payment_method_key", payment, ["payment_method"]
+        ).count(),
+        "dim_churn_reason": lambda: _idempotent_dim(
+            wh, "dim_churn_reason", "churn_reason_key", reason, ["churn_reason"]
+        ).count(),
+        "dim_customer": lambda: _customer_dim(wh, customer).count(),
+        "dim_services": lambda: _null_safe_dim(wh, services).count(),
+    }
+    return dict(zip(builds, run_concurrently(wh.spark, list(builds.values()))))
+
+
+def _customer_dim(wh: Warehouse, customer: DataFrame) -> DataFrame:
+    """dim_customer: NOT EXISTS on customer_id alone (gold SQL :59-61)."""
     if wh.exists("gold", "dim_customer"):
         existing = wh.read("gold", "dim_customer")
         max_key = existing.agg(F.max("customer_key")).collect()[0][0] or 0
@@ -306,11 +310,7 @@ def build_dims(wh: Warehouse) -> dict[str, int]:
             customer.distinct(), "customer_key", order_by=["customer_id"]
         ).select("customer_key", *customer.columns)
     wh.overwrite_safe(dim_customer, "gold", "dim_customer")
-    counts["dim_customer"] = wh.read("gold", "dim_customer").count()
-
-    services = s.select(*SERVICE_COLS)
-    counts["dim_services"] = _null_safe_dim(wh, services).count()
-    return counts
+    return wh.read("gold", "dim_customer")
 
 
 def _null_safe_dim(wh: Warehouse, services: DataFrame) -> DataFrame:

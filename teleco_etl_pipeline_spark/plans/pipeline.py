@@ -10,6 +10,13 @@ Stages (mirrors dags/DataWarehouse.py:879 task order):
   → archive + metadata bookkeeping
 
 Returns a run-report dict (C7/C8 analogue) with per-stage counts.
+
+The file registry is read once for every skip decision and rewritten
+once per status transition, whatever the number of files: PROCESSING,
+then SUCCESS and ARCHIVED (or FAILED) — three rewrites for a normal
+run. Stages whose actions are independent (the gold dims, the DQ
+corpus) overlap them through the one shared helper
+``session.run_concurrently``.
 """
 
 from __future__ import annotations
@@ -43,37 +50,40 @@ def run_warehouse(
     report: dict = {"run_id": run_id, "files": []}
 
     # --- file registration + checksum skip (C5) ---
+    paths = fsrc.list_ingest_files(staging_dir)
+    checksums = {p: fsrc.md5_file(p) for p in paths}
+    known = registry.statuses([os.path.basename(p) for p in paths])
     todo: list[str] = []
-    for path in fsrc.list_ingest_files(staging_dir):
+    for path in paths:
         name = os.path.basename(path)
-        checksum = fsrc.md5_file(path)
-        if registry.should_skip(name, checksum):
+        if FileRegistry.is_done(known.get(name), checksums[path]):
             report["files"].append({"file": name, "status": "SKIPPED"})
-            continue
-        registry.upsert(
-            [
-                {
-                    "file_name": name,
-                    "file_path": path,
-                    "file_size_bytes": os.path.getsize(path),
-                    "status": "PROCESSING",
-                    "run_id": run_id,
-                    "checksum_md5": checksum,
-                }
-            ]
-        )
-        todo.append(path)
+        else:
+            todo.append(path)
 
     if not todo:
         report["status"] = "SKIPPED_NO_NEW_DATA"  # C4 skip semantics
         return report
 
+    names = [os.path.basename(p) for p in todo]
+    registry.upsert(
+        [
+            {
+                "file_name": n,
+                "file_path": p,
+                "file_size_bytes": os.path.getsize(p),
+                "status": "PROCESSING",
+                "run_id": run_id,
+                "checksum_md5": checksums[p],
+            }
+            for n, p in zip(names, todo)
+        ]
+    )
+
     try:
         raw = (
             fsrc.read_csv_dir(spark, staging_dir)
-            .filter(
-                F.col("source_file").isin([os.path.basename(p) for p in todo])
-            )
+            .filter(F.col("source_file").isin(names))
             .drop("source_file")
         )
         report["staging"] = medallion.load_staging(wh, raw)
@@ -85,21 +95,31 @@ def run_warehouse(
         report["gold_fact_rows"] = medallion.build_fact(wh, run_date)
         report["gold_gate"] = medallion.gold_quality_gate(wh)
     except Exception as e:  # noqa: BLE001
-        for p in todo:
-            registry.set_status(os.path.basename(p), "FAILED", str(e)[:500])
+        registry.set_statuses(names, "FAILED", str(e)[:500])
         raise
 
     # --- archive + final metadata (S13, M7) ---
-    suffix = dt.datetime.now().strftime("%Y%m%d_%H%M%S")
-    archive_dir = os.path.join(staging_dir, "archive")
-    for p in todo:
-        name = os.path.basename(p)
-        registry.set_status(name, "SUCCESS")
-        if archive:
-            fsrc.archive_file(p, archive_dir, suffix)
-            registry.set_status(name, "ARCHIVED")
-            report["files"].append({"file": name, "status": "ARCHIVED"})
-        else:
-            report["files"].append({"file": name, "status": "SUCCESS"})
+    registry.set_statuses(names, "SUCCESS")
+    done, status = names, "SUCCESS"
+    if archive:
+        done, status = _archive(registry, todo, staging_dir), "ARCHIVED"
+    report["files"] += [{"file": n, "status": status} for n in done]
     report["status"] = "SUCCESS"
     return report
+
+
+def _archive(registry: FileRegistry, paths: list[str], staging_dir: str) -> list[str]:
+    """Move ``paths`` to ``staging_dir/archive`` and record them ARCHIVED
+    in one registry write. Files already moved are recorded even if a
+    later move fails."""
+    suffix = dt.datetime.now().strftime("%Y%m%d_%H%M%S")
+    archive_dir = os.path.join(staging_dir, "archive")
+    archived: list[str] = []
+    try:
+        for p in paths:
+            fsrc.archive_file(p, archive_dir, suffix)
+            archived.append(os.path.basename(p))
+    finally:
+        if archived:
+            registry.set_statuses(archived, "ARCHIVED")
+    return archived

@@ -23,9 +23,10 @@ from teleco_etl_pipeline_spark.sources.tables import load_table
 
 # Cross-engine tie stabilizer: Spark rounds doubles via their shortest
 # decimal string (BigDecimal HALF_UP); DuckDB via binary scaling. On
-# exact-tie quotients (e.g. 4201.315) they disagree. Sums are made
-# DECIMAL-exact first, so both engines hold bit-identical doubles
-# after division; a +1e-9 nudge then makes ROUND agree everywhere.
+# exact ties (a quotient like 4201.315, or an exact decimal sum like
+# 289100.845 cast to DOUBLE) they disagree. Sums are made DECIMAL-exact
+# first, so both engines hold bit-identical doubles; a +1e-9 nudge
+# before every ROUND then makes them agree everywhere.
 EPS = 1e-9
 
 
@@ -42,13 +43,13 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     "pricing_summary",
     """
     SELECT l_returnflag, l_linestatus,
-           ROUND(CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE), 2)      AS sum_qty,
-           ROUND(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE), 2) AS sum_base_price,
+           ROUND(CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) + 1e-9, 2)      AS sum_qty,
+           ROUND(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) + 1e-9, 2) AS sum_base_price,
            ROUND(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-                          * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE), 2) AS sum_disc_price,
+                          * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) + 1e-9, 2) AS sum_disc_price,
            ROUND(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
                           * (1 - CAST(l_discount AS DECIMAL(18,2)))
-                          * (1 + CAST(l_tax AS DECIMAL(18,2)))) AS DOUBLE), 2)   AS sum_charge,
+                          * (1 + CAST(l_tax AS DECIMAL(18,2)))) AS DOUBLE) + 1e-9, 2)   AS sum_charge,
            ROUND(CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*) + 1e-9, 4)      AS avg_qty,
            ROUND(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*) + 1e-9, 4) AS avg_price,
            ROUND(CAST(SUM(CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*) + 1e-9, 4)      AS avg_disc,
@@ -78,10 +79,10 @@ def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.filter(F.col("l_shipdate") <= F.lit("2000-09-01 00:00:00").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
-            F.round(F.sum(qty).cast("double"), 2).alias("sum_qty"),
-            F.round(F.sum(price).cast("double"), 2).alias("sum_base_price"),
-            F.round(F.sum(disc_price).cast("double"), 2).alias("sum_disc_price"),
-            F.round(F.sum(disc_price * (F.lit(1) + tax)).cast("double"), 2).alias(
+            F.round(F.sum(qty).cast("double") + EPS, 2).alias("sum_qty"),
+            F.round(F.sum(price).cast("double") + EPS, 2).alias("sum_base_price"),
+            F.round(F.sum(disc_price).cast("double") + EPS, 2).alias("sum_disc_price"),
+            F.round(F.sum(disc_price * (F.lit(1) + tax)).cast("double") + EPS, 2).alias(
                 "sum_charge"
             ),
             F.round(F.sum(qty).cast("double") / cnt + EPS, 4).alias("avg_qty"),

@@ -38,12 +38,10 @@ def reprocess_fixed_file(
 
     # Full validation incl. domain membership (Reprocessing.py:74-109)
     rules = quality.churn_rules(fixed, check_domains=True)
-    good, bad = quality.split_good_bad(fixed, rules)
-    report = {
-        "file": os.path.basename(path),
-        "input": fixed.count(),
-        "rejected": bad.count(),
-    }
+    annotated = quality.annotate(fixed, rules)
+    good, bad = quality.split_annotated(annotated)
+    n_input, n_rejected = quality.split_counts(annotated)
+    report = {"file": os.path.basename(path), "input": n_input, "rejected": n_rejected}
     if report["rejected"] and quarantine_dir:
         out = os.path.join(
             quarantine_dir, f"rejected_{os.path.basename(path)}.csv"

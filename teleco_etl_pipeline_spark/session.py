@@ -16,8 +16,14 @@ test runs while remaining the *right defaults* on a large cluster:
 from __future__ import annotations
 
 import os
+from collections.abc import Callable, Sequence
+from concurrent.futures import ThreadPoolExecutor
+from typing import TypeVar
 
 from pyspark.sql import SparkSession
+from pyspark.util import inheritable_thread_target
+
+T = TypeVar("T")
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -110,3 +116,26 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def run_concurrently(spark: SparkSession, thunks: Sequence[Callable[[], T]]) -> list[T]:
+    """Run independent thunks, each issuing its own Spark actions, on a
+    driver thread pool and return their results in input order.
+
+    Small-table actions spend most of their wall time on the driver
+    (planning, scheduling, result handling); overlapping several keeps
+    the executors busy through those gaps. Each thunk is wrapped on its
+    own with ``inheritable_thread_target``, so every worker thread
+    starts from a private copy of the caller's local properties (job
+    group, scheduler pool): its jobs stay tagged like the caller's,
+    and concurrent SQL executions never share one properties object.
+    At most ``defaultParallelism`` thunks run at once. If any thunk
+    fails, every thunk still runs to its end, then the exception of
+    the earliest failing thunk (in input order) is raised.
+    """
+    if not thunks:
+        return []
+    workers = min(len(thunks), spark.sparkContext.defaultParallelism)
+    with ThreadPoolExecutor(max_workers=workers) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(t)) for t in thunks]
+    return [f.result() for f in futures]

@@ -77,24 +77,44 @@ class FileRegistry:
 
     def set_status(self, file_name: str, status: str, error: str | None = None) -> None:
         """M7: conditional status update."""
-        assert status in STATUSES
+        self.set_statuses([file_name], status, error)
+
+    def set_statuses(
+        self, file_names: list[str], status: str, error: str | None = None
+    ) -> None:
+        """One status transition for several files: one registry rewrite."""
+        if status not in STATUSES:
+            raise ValueError(f"unknown file status {status!r}")
         self.upsert(
-            [{"file_name": file_name, "status": status, "error_message": error}]
+            [{"file_name": n, "status": status, "error_message": error} for n in file_names]
         )
 
-    def status_of(self, file_name: str) -> tuple[str, str] | None:
+    def statuses(self, file_names: list[str]) -> dict[str, tuple[str, str]]:
+        """file_name -> (status, checksum_md5) for those of ``file_names``
+        that are registered, in one collect."""
         rows = (
             self.load()
-            .filter(F.col("file_name") == file_name)
-            .select("status", "checksum_md5")
+            .filter(F.col("file_name").isin(file_names))
+            .select("file_name", "status", "checksum_md5")
             .collect()
         )
-        return (rows[0][0], rows[0][1]) if rows else None
+        return {r[0]: (r[1], r[2]) for r in rows}
+
+    def status_of(self, file_name: str) -> tuple[str, str] | None:
+        return self.statuses([file_name]).get(file_name)
+
+    @staticmethod
+    def is_done(current: tuple[str, str] | None, checksum: str) -> bool:
+        """C5: a file already successfully processed, unchanged."""
+        return (
+            current is not None
+            and current[0] in ("SUCCESS", "ARCHIVED")
+            and current[1] == checksum
+        )
 
     def should_skip(self, file_name: str, checksum: str) -> bool:
         """C5: skip files already successfully processed, unchanged."""
-        cur = self.status_of(file_name)
-        return cur is not None and cur[0] in ("SUCCESS", "ARCHIVED") and cur[1] == checksum
+        return self.is_done(self.status_of(file_name), checksum)
 
 
 class WatermarkStore:
